@@ -811,7 +811,7 @@ def _q_pagerank(spark, sf_dir):
 
 def _q_components(spark, sf_dir):
     g = _coorder_graph(spark, sf_dir)
-    return connected_components(g, algorithm="star")
+    return connected_components(g)
 
 
 def _q_triangles(spark, sf_dir):

@@ -247,7 +247,7 @@ def run_suite(spark, sf_dir: str, budget: Budget | None = None,
         extra["pagerank_vertices"] = n_iter_rows
 
         t0 = time.time()
-        connected_components(g_canon, algorithm="star").count()
+        connected_components(g_canon).count()
         times["q_connected_components"] = round(time.time() - t0, 3)
 
         t0 = time.time()

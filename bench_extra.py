@@ -94,7 +94,7 @@ def suite_queries(spark, sf_dir: str):
     )
     yield (
         "q_connected_components",
-        lambda: connected_components(g_canon, algorithm="star").count(),
+        lambda: connected_components(g_canon).count(),
     )
     yield ("q_triangle_count", lambda: triangle_count(g_canon).count())
     yield (

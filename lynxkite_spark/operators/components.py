@@ -1,4 +1,4 @@
-"""Connected components as iterative label-min propagation.
+"""Connected components by star contraction, labeled with the minimum id.
 
 Reference: /root/reference/app/.../graph_operations/ConnectedComponents.scala
 — random-contraction MapReduce with an arbitrary-representative output;
@@ -14,23 +14,20 @@ reversed copies (default), matching "the edges must all be symmetric"
 (ConnectedComponents.scala:3). Isolated vertices become singleton
 components (ConnectedComponents.scala:48-53).
 
-Two algorithms:
-  * ``minlabel`` — L' = min(L, min over neighbors L); converges in
-    O(diameter) rounds. Right for short-diameter web/dependency graphs.
-  * ``star`` (default) — Kiveris et al. "Connected Components in
-    MapReduce and Beyond" alternating large-star/small-star contraction;
-    O(log n) rounds regardless of diameter — the 100 TB-safe choice.
-
-Both are integer-exact by construction (min/joins only, no float math).
+The algorithm is Kiveris et al. "Connected Components in MapReduce and
+Beyond": alternating large-star/small-star contraction, O(log n) rounds
+regardless of diameter (label-min propagation needs O(diameter)). It is
+integer-exact by construction (min/joins only, no float math).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from lynxkite_spark import session
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.checkpoint import IterationCheckpoints, materialize
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -85,7 +82,6 @@ def _small_star(edges: DataFrame, broadcast_m: bool = False) -> DataFrame:
 
 def connected_components(
     graph: Graph,
-    algorithm: str = "star",
     max_iterations: int = 50,
     checkpoint=None,
     checkpoint_every: int = 10,
@@ -94,111 +90,49 @@ def connected_components(
     """Returns ``belongs_to``: DataFrame[id: long, component: long] — a
     total function (every vertex labeled), component = min vertex id.
 
-    With a ``CheckpointManager``, the min-label variant writes its label
-    table every ``checkpoint_every`` rounds and a rerun resumes from the
-    newest stored round (labels are exact longs — bit-identical resume).
-    The star variant's state is the contracted edge set itself and is
-    checkpointed the same way."""
+    With a ``CheckpointManager``, the contracted edge set (the star
+    algorithm's whole state) is written every ``checkpoint_every`` rounds
+    and at the cap, and a rerun resumes from the newest stored round
+    (exact longs — bit-identical resume)."""
     spark = graph.vertices.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     vertices = graph.vertices.select("id")
-    edges = _symmetrized(graph.edges).repartition(n_part, "src")
-
-    from lynxkite_spark.plans.checkpoint import materialize, step_key
-
-    params = {"algorithm": algorithm, "max_iterations": max_iterations}
-    fp = input_fingerprint or "anon"
-
-    if algorithm == "star":
-        # per-round min tables are bounded by the (shrinking) vertex
-        # count: broadcast them below the same threshold pagerank uses
-        # for its rank table — the contracted edge stream then never
-        # shuffles for the relink joins, only for groupBy/distinct
-        broadcast_m = graph.vertices.count() <= 200_000
-        e = materialize(edges)
-        start_iter = 0
-        if checkpoint is not None:
-            for k in range(max_iterations, 0, -1):
-                cached = checkpoint.load(step_key(fp, "cc", params, k))
-                if cached is not None:
-                    e = cached
-                    start_iter = k
-                    break
-        prev_count = e.count()
-        for it in range(start_iter, max_iterations):
-            # cut lineage every round — star contraction references e
-            # multiple times per iteration (plan growth, see materialize)
-            new_e = _small_star(
-                _large_star(e, broadcast_m), broadcast_m
-            ).localCheckpoint(eager=False)
-            new_count = new_e.count()
-            # converged when the edge set is stable (star graph reached):
-            # equal cardinality and no edge outside the old set
-            changed = 1
-            if new_count == prev_count:
-                changed = new_e.exceptAll(e).limit(1).count()
-            e, prev_count = new_e, new_count
-            if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-                e = checkpoint.save(
-                    e,
-                    step_key(fp, "cc", params, it + 1),
-                    metrics={"iteration": it + 1, "edges": new_count},
-                )
-            if changed == 0:
-                break
-        labels = (
-            e.where(F.col("src") > F.col("dst"))
-            .groupBy("src")
-            .agg(F.min("dst").alias("component"))
-            .select(F.col("src").alias("id"), "component")
+    # the key keeps the algorithm name so stored rounds stay addressable
+    params = {"algorithm": "star", "max_iterations": max_iterations}
+    store = IterationCheckpoints(
+        checkpoint, input_fingerprint, "cc", params, max_iterations, checkpoint_every
+    )
+    # per-round min tables are bounded by the (shrinking) vertex count:
+    # broadcast them below the same threshold pagerank uses for its rank
+    # table — the contracted edge stream then never shuffles for the
+    # relink joins, only for groupBy/distinct
+    broadcast_m = graph.vertices.count() <= session.BROADCAST_ROWS
+    start_iter, e = store.resume()
+    if e is None:
+        e = materialize(_symmetrized(graph.edges).repartition(n_part, "src"))
+    prev_count = e.count()
+    for k in range(start_iter + 1, max_iterations + 1):
+        # cut lineage every round — star contraction references e
+        # multiple times per iteration (plan growth, see materialize)
+        new_e = _small_star(_large_star(e, broadcast_m), broadcast_m).localCheckpoint(
+            eager=False
         )
-    else:  # minlabel
-        labels = vertices.select("id", F.col("id").alias("component"))
-        start_iter = 0
-        if checkpoint is not None:
-            for k in range(max_iterations, 0, -1):
-                cached = checkpoint.load(step_key(fp, "cc", params, k))
-                if cached is not None:
-                    labels = cached
-                    start_iter = k
-                    break
-        labels = materialize(labels.repartition(n_part, "id"))
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        for it in range(start_iter, max_iterations):
-            nbr_min = (
-                edges.join(labels.hint("shuffle_hash"), edges.src == labels.id)
-                .groupBy("dst")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels.id == nbr_min.dst, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                    ).alias("component"),
-                )
-                .repartition(n_part, "id")
-                .localCheckpoint(eager=False)  # materialized by the change check
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-                labels = checkpoint.save(
-                    labels,
-                    step_key(fp, "cc", params, it + 1),
-                    metrics={"iteration": it + 1, "changed": changed},
-                )
-            if changed == 0:
-                break
-        edges.unpersist()
-
+        new_count = new_e.count()
+        # converged when the edge set is stable (star graph reached):
+        # equal cardinality and no edge outside the old set
+        changed = 1
+        if new_count == prev_count:
+            changed = new_e.exceptAll(e).limit(1).count()
+        e = store.save(new_e, k, edges=new_count)
+        prev_count = new_count
+        if changed == 0:
+            break
+    labels = (
+        e.where(F.col("src") > F.col("dst"))
+        .groupBy("src")
+        .agg(F.min("dst").alias("component"))
+        .select(F.col("src").alias("id"), "component")
+    )
     # isolated vertices → singleton components (ConnectedComponents.scala:48-53)
     return (
         vertices.join(labels, "id", "left")

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.checkpoint import IterationCheckpoints, materialize
+from lynxkite_spark.session import BROADCAST_ROWS
 
 
 def label_propagation(
@@ -31,14 +33,14 @@ def label_propagation(
     checkpoint=None,
     checkpoint_every: int = 10,
     input_fingerprint: str | None = None,
-    broadcast_threshold: int = 200_000,
+    broadcast_threshold: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Returns belongs_to: DataFrame[id: long, label: long].
 
     With a ``CheckpointManager`` the label table is written every
-    ``checkpoint_every`` rounds (per-partition lineage sidecar like
-    PageRank's) and a rerun resumes from the newest stored round —
-    labels are exact longs, so a resumed run is bit-identical."""
+    ``checkpoint_every`` rounds and at the cap (per-partition lineage
+    sidecar like PageRank's) and a rerun resumes from the newest stored
+    round — labels are exact longs, so a resumed run is bit-identical."""
     spark = graph.vertices.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     g = graph.with_weight()
@@ -51,19 +53,13 @@ def label_propagation(
     sym = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    from lynxkite_spark.plans.checkpoint import materialize, step_key
-
     params = {"max_iterations": max_iterations, "weighted": weighted}
-    fp = input_fingerprint or "anon"
-    start_iter = 0
-    labels = graph.vertices.select("id", F.col("id").alias("label"))
-    if checkpoint is not None:
-        for k in range(max_iterations, 0, -1):
-            cached = checkpoint.load(step_key(fp, "lpa", params, k))
-            if cached is not None:
-                labels = cached
-                start_iter = k
-                break
+    store = IterationCheckpoints(
+        checkpoint, input_fingerprint, "lpa", params, max_iterations, checkpoint_every
+    )
+    start_iter, labels = store.resume()
+    if labels is None:
+        labels = graph.vertices.select("id", F.col("id").alias("label"))
     labels = materialize(labels.repartition(n_part, "id"))
     # Broadcast the vertex-sized label table into the gather join while
     # it is small (same trade as pagerank's broadcast_ranks): the big
@@ -74,7 +70,7 @@ def label_propagation(
     # scaling).
     broadcast_labels = graph.vertices.count() <= broadcast_threshold
 
-    for it in range(start_iter, max_iterations):
+    for k in range(start_iter + 1, max_iterations + 1):
         # gather neighbor labels onto dst; per-(dst,label) weight sums are
         # map-side combinable, so hub vertices don't skew the shuffle
         # hash-build the vertex-sized label table: the big edge stream is
@@ -106,13 +102,7 @@ def label_propagation(
         changed = (
             new_labels.where(F.col("label") != F.col("_old")).limit(1).count()
         )
-        labels = new_labels.drop("_old")
-        if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-            labels = checkpoint.save(
-                labels,
-                step_key(fp, "lpa", params, it + 1),
-                metrics={"iteration": it + 1, "changed": changed},
-            )
+        labels = store.save(new_labels.drop("_old"), k, changed=changed)
         if changed == 0:
             break
     sym.unpersist()

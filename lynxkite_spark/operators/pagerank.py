@@ -12,11 +12,12 @@ Reference: /root/reference/app/.../graph_operations/PageRank.scala:43-88
      (:73, default 5 / damping 0.85,
      GraphComputationOperations.scala:386-389); we add convergence to
      ``tol`` (max |Δrank| < tol), which subsumes fixed N — pass
-     ``iterations=N, tol=None`` for numerical equivalence with the
-     reference within float reduction-order tolerance (the dangling-mass
-     total is an algebraic identity over the rank table, so summation
-     order differs; allclose at 1e-6 — the north rule's contract — holds,
-     bit-for-bit equality does not).
+     ``iterations=N`` for numerical equivalence with the reference
+     within float reduction-order tolerance (the dangling-mass total is
+     an algebraic identity over the rank table, so summation order
+     differs; allclose at 1e-6 — the north rule's contract — holds,
+     bit-for-bit equality does not). Both modes run the same loop; a
+     fixed count just never stops early.
 
 Direction handling follows the frontend's Direction wrapper
 (Operations.scala:413-448): "outgoing edges" uses edges as-is,
@@ -29,8 +30,10 @@ Scale notes (SURVEY.md §4):
     sources join against a broadcast of just the hot rank rows;
   * groupBy(dst) skew needs no salting — sum() partial-aggregates
     map-side before the shuffle;
-  * lineage is cut with localCheckpoint every few iterations and
-    (optionally) a content-addressed parquet checkpoint for resume.
+  * each round is one driver action: lineage is cut with a lazy
+    localCheckpoint that the round's delta/total aggregate materializes;
+  * (optionally) a content-addressed parquet checkpoint for resume,
+    through the shared ``IterationCheckpoints`` policy.
 """
 
 from __future__ import annotations
@@ -42,9 +45,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
-from lynxkite_spark.plans.checkpoint import CheckpointManager, materialize, step_key
+from lynxkite_spark.plans.checkpoint import (
+    CheckpointManager,
+    IterationCheckpoints,
+    materialize,
+)
 from lynxkite_spark.plans.skew import hot_keys, hybrid_join
 from lynxkite_spark.plans.spread import plan_is_expensive as _plan_is_expensive
+from lynxkite_spark.session import BROADCAST_ROWS, HOT_KEY_THRESHOLD
 
 
 def pagerank(
@@ -58,12 +66,14 @@ def pagerank(
     checkpoint_every: int = 10,
     input_fingerprint: str | None = None,
     skew_threshold: int | None = None,
-    broadcast_threshold: int = 200_000,
+    broadcast_threshold: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Returns DataFrame[id: long, pagerank: double].
 
-    ``iterations`` set → fixed count (reference mode). Otherwise iterate
-    until ``max |Δrank| < tol`` or ``max_iterations``.
+    ``iterations`` set → exactly that many rounds (reference mode).
+    Otherwise iterate until ``max |Δrank| < tol`` or ``max_iterations``
+    (``tol=None`` runs all ``max_iterations``). The result is fully
+    computed on return.
     """
     spark = graph.vertices.sparkSession
     # Pin an expensive-to-recompute RAW edge table once up front — the
@@ -145,50 +155,31 @@ def pagerank(
     hot = None
     if not broadcast_ranks:
         if skew_threshold is None:
-            from lynxkite_spark.session import HOT_KEY_THRESHOLD
-
             skew_threshold = HOT_KEY_THRESHOLD
         hot = hot_keys(en, "src", skew_threshold).persist(StorageLevel.MEMORY_AND_DISK)
         use_hybrid = hot.count() > 0
 
     params = {"damping": damping, "iterations": iterations, "tol": tol, "direction": direction}
-    fp = input_fingerprint or "anon"
-
-    # resume: find the newest checkpointed iteration
-    start_iter = 0
-    ranks = vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
-    if checkpoint is not None:
-        limit = iterations if iterations is not None else max_iterations
-        for k in range(limit, 0, -1):
-            key = step_key(fp, "pagerank", params, k)
-            cached = checkpoint.load(key)
-            if cached is not None:
-                if "has_out" in cached.columns:
-                    ranks = cached
-                else:
-                    ranks = vertices.join(cached.select("id", "pagerank"), "id")
-                start_iter = k
-                break
+    limit = iterations if iterations is not None else max_iterations
+    store = IterationCheckpoints(
+        checkpoint, input_fingerprint, "pagerank", params, limit, checkpoint_every
+    )
+    start_iter, ranks = store.resume()
+    if ranks is None:
+        ranks = vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
     ranks = materialize(ranks.repartition(n_part, "id"))
 
-    limit = iterations if iterations is not None else max_iterations
+    # A fixed iteration count (the reference's mode) never stops early.
+    stop_tol = tol if iterations is None else None
     history: list[dict] = []
-    # Convergence mode folds the dangling-mass total into the SAME
-    # driver action that computes the delta: the previous iteration's
-    # agg returns (max |Δ|, Σ rank over has_out) together, and the total
-    # enters the next plan as a literal — removing the per-iteration
-    # 1-row aggregate subtree + its broadcast build. The literal is the
-    # identical double (same partial/final sum plan over the same
-    # materialized table; py4j round-trips doubles exactly).
-    converge = tol is not None and iterations is None
-    tot_lit: float | None = None
-    if converge:
-        tot_lit = damping * float(
-            ranks.where(F.col("has_out"))
-            .agg(F.sum("pagerank").alias("s"))
-            .first()["s"]
-            or 0.0
-        )
+    # The dangling-mass total enters each round's plan as a literal: the
+    # previous round's single driver action returns (max |Δ|, Σ rank over
+    # has_out) together, so the loop body carries no 1-row aggregate
+    # subtree or broadcast build.
+    tot_lit = damping * float(
+        ranks.where(F.col("has_out")).agg(F.sum("pagerank").alias("s")).first()["s"]
+        or 0.0
+    )
 
     for k in range(start_iter + 1, limit + 1):
         rank_lookup = ranks.select(F.col("id").alias("src"), "pagerank")
@@ -204,80 +195,39 @@ def pagerank(
         contrib = gathered.groupBy("dst").agg(
             (F.sum(F.col("pagerank") * F.col("wn")) * F.lit(damping)).alias("incoming")
         )
-        if converge:
-            # dangling-mass total as a literal (computed by the previous
-            # iteration's fused delta action — see above)
-            uniform = (F.lit(float(n_vertices)) - F.lit(tot_lit)) / F.lit(
-                float(n_vertices)
+        uniform = (F.lit(float(n_vertices)) - F.lit(tot_lit)) / F.lit(float(n_vertices))
+        # cut lineage every iteration (lazily — materialized by the delta
+        # action below): the plan references ranks twice per round, so
+        # analysis time is exponential without truncation
+        new_ranks = (
+            ranks.join(
+                contrib if broadcast_ranks else contrib.hint("shuffle_hash"),
+                ranks.id == contrib.dst,
+                "left",
             )
-        else:
-            # fixed-iteration mode stays fully lazy: the total is a
-            # broadcast 1-row agg in-plan over the cached rank table —
-            # zero driver actions in the loop body
-            tot = ranks.where(F.col("has_out")).agg(
-                (F.sum("pagerank") * F.lit(damping)).alias("_tot")
+            .select(
+                "id",
+                "has_out",
+                (F.coalesce(F.col("incoming"), F.lit(0.0)) + uniform).alias("pagerank"),
+                F.col("pagerank").alias("_prev"),
             )
-            uniform = (
-                F.lit(float(n_vertices)) - F.coalesce(F.col("_tot"), F.lit(0.0))
-            ) / F.lit(float(n_vertices))
-        base = ranks if converge else ranks.crossJoin(F.broadcast(tot))
-        new_ranks = base.join(
-            contrib if broadcast_ranks else contrib.hint("shuffle_hash"),
-            ranks.id == contrib.dst,
-            "left",
-        ).select(
-            "id",
-            "has_out",
-            (F.coalesce(F.col("incoming"), F.lit(0.0)) + uniform).alias("pagerank"),
-            *([F.col("pagerank").alias("_prev")] if converge else []),
+            .localCheckpoint(eager=False)
         )
-        ckpt_due = checkpoint is not None and (k % checkpoint_every == 0 or k == limit)
-        if ckpt_due and not converge:
-            key = step_key(fp, "pagerank", params, k)
-            new_ranks = checkpoint.save(
-                new_ranks, key, metrics={"iteration": k, "history": history}
-            )
-        # cut lineage every iteration (lazily — materialized by the next
-        # action): the plan references ranks twice per round, so analysis
-        # time is exponential without truncation
-        new_ranks = new_ranks.localCheckpoint(eager=False)
+        # ONE action per iteration: materializes the checkpoint and
+        # returns (max |Δrank|, next dangling-mass total) together
+        row = new_ranks.agg(
+            F.max(F.abs(F.col("pagerank") - F.col("_prev"))).alias("d"),
+            F.sum(F.when(F.col("has_out"), F.col("pagerank"))).alias("s"),
+        ).first()
+        delta = row["d"]
+        tot_lit = damping * float(row["s"] or 0.0)
+        history.append({"iteration": k, "max_delta": delta})
+        # a due checkpoint is written from the materialized local one
+        ranks = store.save(new_ranks.drop("_prev"), k, history=history)
+        if stop_tol is not None and delta < stop_tol:
+            break
 
-        if converge:
-            # ONE action per iteration: materializes the checkpoint and
-            # returns (max |Δrank|, next dangling-mass total) together —
-            # the old shape joined new vs old ranks in a second pass and
-            # ran the total as a separate in-plan aggregate + broadcast
-            row = new_ranks.agg(
-                F.max(F.abs(F.col("pagerank") - F.col("_prev"))).alias("d"),
-                F.sum(F.when(F.col("has_out"), F.col("pagerank"))).alias("s"),
-            ).first()
-            delta = row["d"]
-            tot_lit = damping * float(row["s"] or 0.0)
-            history.append({"iteration": k, "max_delta": delta})
-            ranks = new_ranks.drop("_prev")
-            if ckpt_due:
-                # write from the already-materialized local checkpoint
-                key = step_key(fp, "pagerank", params, k)
-                ranks = checkpoint.save(
-                    ranks, key, metrics={"iteration": k, "history": history}
-                )
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed mode defers all execution to the caller's action
-            ranks = new_ranks
-
-    # Unpersist unconditionally (r6 measured trade, recorded here):
-    # fixed mode returns a LAZY plan whose per-iteration checkpoints
-    # still reference en/vertices, so the caller's action recomputes
-    # the edge normalization once per iteration reference. Retaining
-    # the caches instead was measured ~20% faster per scaling leg —
-    # but it leaks session-lifetime cache entries sized like the edge
-    # table (CacheManager entries are not cleaned by reference GC), a
-    # real cost for any long-lived session calling fixed-mode pagerank
-    # repeatedly (the oracle-gate session runs dozens). The memory-
-    # safe release stays; converge mode has executed everything by
-    # now, so for it this is pure cleanup.
+    # every round has run by now; the caches are pure cleanup
     en.unpersist()
     if hot is not None:
         hot.unpersist()

@@ -111,6 +111,51 @@ class CheckpointManager:
             return json.load(f)
 
 
+class IterationCheckpoints:
+    """The resume/save policy every iterative operator shares.
+
+    Step keys are ``step_key(input_fingerprint or "anon", op, params, k)``
+    for round ``k``. ``resume()`` probes backwards from ``limit`` for the
+    newest stored round; ``save(df, k)`` writes round ``k`` when
+    ``k % every == 0`` or ``k == limit``. With ``checkpoint=None`` both
+    are no-ops, so operators call them unconditionally."""
+
+    def __init__(
+        self,
+        checkpoint: CheckpointManager | None,
+        input_fingerprint: str | None,
+        op: str,
+        params: dict,
+        limit: int,
+        every: int,
+    ):
+        self.checkpoint = checkpoint
+        self.fp = input_fingerprint or "anon"
+        self.op = op
+        self.params = params
+        self.limit = limit
+        self.every = every
+
+    def _key(self, k: int) -> str:
+        return step_key(self.fp, self.op, self.params, k)
+
+    def resume(self) -> tuple[int, DataFrame | None]:
+        """(newest stored round, its table), or (0, None)."""
+        if self.checkpoint is not None:
+            for k in range(self.limit, 0, -1):
+                cached = self.checkpoint.load(self._key(k))
+                if cached is not None:
+                    return k, cached
+        return 0, None
+
+    def save(self, df: DataFrame, k: int, **metrics) -> DataFrame:
+        """Round ``k``'s table: re-read from parquet if it was due for a
+        checkpoint, ``df`` itself otherwise."""
+        if self.checkpoint is None or (k % self.every and k != self.limit):
+            return df
+        return self.checkpoint.save(df, self._key(k), {"iteration": k, **metrics})
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage NOW: eager localCheckpoint. Iterative DataFrame
     algorithms reference the previous state several times per round, so

@@ -94,22 +94,45 @@ def test_pagerank_mass_conservation(spark):
 # ------------------------------------------------- Connected components
 
 
-@pytest.mark.parametrize("algorithm", ["star", "minlabel"])
-def test_components_line_and_isolated(spark, algorithm):
+def test_components_line_and_isolated(spark):
     """Reference test shape: path graph + isolated vertex
     (ConnectedComponentsTest.scala:48-75); labels are canonical minima."""
     g = graph_from_adjacency(spark, {0: [1], 1: [2], 2: [], 5: []})
-    got = {r["id"]: r["component"] for r in connected_components(g, algorithm=algorithm).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(g).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 5: 5}
 
 
-@pytest.mark.parametrize("algorithm", ["star", "minlabel"])
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_components_random_vs_oracle(spark, algorithm, seed):
+def test_components_random_vs_oracle(spark, seed):
     vertices, edges = random_graph(80, 90, seed=seed)
     g = as_graph(spark, vertices, edges)
-    got = {r["id"]: r["component"] for r in connected_components(g, algorithm=algorithm).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(g).collect()}
     assert got == components_oracle(vertices, edges)
+
+
+def test_components_shuffle_hash_path_matches_broadcast(spark, monkeypatch):
+    """Graphs above ``session.BROADCAST_ROWS`` vertices relink through
+    shuffle-hash joins instead of broadcasting the per-round min tables;
+    a cut-over of 0 runs that path on a small graph."""
+    from lynxkite_spark import session
+    from lynxkite_spark.operators import components
+
+    vertices, edges = random_graph(80, 90, seed=2)
+    g = as_graph(spark, vertices, edges)
+    broadcast = {r["id"]: r["component"] for r in connected_components(g).collect()}
+
+    modes = []
+    large_star = components._large_star
+
+    def spy(e, broadcast_m=False):
+        modes.append(broadcast_m)
+        return large_star(e, broadcast_m)
+
+    monkeypatch.setattr(session, "BROADCAST_ROWS", 0)
+    monkeypatch.setattr(components, "_large_star", spy)
+    shuffled = {r["id"]: r["component"] for r in connected_components(g).collect()}
+    assert modes and not any(modes)
+    assert shuffled == broadcast == components_oracle(vertices, edges)
 
 
 def test_components_long_path_star(spark):
@@ -117,7 +140,7 @@ def test_components_long_path_star(spark):
     not O(diameter)."""
     n = 64
     g = graph_from_adjacency(spark, {i: [i + 1] for i in range(n - 1)})
-    got = {r["id"]: r["component"] for r in connected_components(g, algorithm="star", max_iterations=12).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(g, max_iterations=12).collect()}
     assert got == {i: 0 for i in range(n)}
 
 

@@ -145,6 +145,44 @@ def test_components_on_derived_graph_partition_invariant(spark, corpus):
     assert c1 == c2  # bit-identical labels, not just isomorphic
 
 
+def test_iteration_checkpoints_policy():
+    """The shared resume/save policy, against a recording store: the
+    probe runs newest-first, rounds are written every ``every`` and at
+    the cap, and without a store both calls are no-ops."""
+    from lynxkite_spark.plans.checkpoint import IterationCheckpoints
+
+    class Store:
+        def __init__(self, stored):
+            self.stored, self.loads, self.saves = dict(stored), [], []
+
+        def load(self, key):
+            self.loads.append(key)
+            return self.stored.get(key)
+
+        def save(self, df, key, metrics):
+            self.saves.append((key, metrics))
+            return ("saved", df)
+
+    params = {"algorithm": "star", "max_iterations": 5}
+    key = [None] + [step_key("fp", "cc", params, k) for k in range(1, 6)]
+    store = Store({key[2]: "round2"})
+    ic = IterationCheckpoints(store, "fp", "cc", params, limit=5, every=2)
+    assert ic.resume() == (2, "round2")
+    assert store.loads == [key[5], key[4], key[3], key[2]]
+    assert [ic.save(f"r{k}", k, edges=k) for k in (3, 4, 5)] == [
+        "r3", ("saved", "r4"), ("saved", "r5")
+    ]
+    assert store.saves == [
+        (key[4], {"iteration": 4, "edges": 4}),
+        (key[5], {"iteration": 5, "edges": 5}),
+    ]
+    assert IterationCheckpoints(Store({}), None, "cc", params, 5, 2).resume() == (0, None)
+
+    off = IterationCheckpoints(None, "fp", "cc", params, limit=5, every=1)
+    assert off.resume() == (0, None)
+    assert off.save("r5", 5) == "r5"
+
+
 def test_checkpoint_resume(spark, corpus, tmp_path):
     """Kill-after-iteration-k resume (SURVEY.md §5c): a second run with the
     same content-hashed keys starts from the stored iteration and produces
@@ -202,8 +240,9 @@ def test_builtin_extractor_matches_pandas_udf(spark):
 
 
 def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):
-    """LPA and connected components resume from the newest stored round
-    exactly like PageRank (labels are longs — bit-identical resume)."""
+    """LPA and star connected components resume from the newest stored
+    round exactly like PageRank (labels are longs — bit-identical resume;
+    star CC stores its contracted edge set)."""
     import shutil
 
     from lynxkite_spark.operators import connected_components, label_propagation
@@ -243,11 +282,11 @@ def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):
     full_cc = {
         r["id"]: r["component"]
         for r in connected_components(
-            g, algorithm="minlabel", max_iterations=8,
+            g, max_iterations=8,
             checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
         ).collect()
     }
-    params_cc = {"algorithm": "minlabel", "max_iterations": 8}
+    params_cc = {"algorithm": "star", "max_iterations": 8}
     assert cp2.exists(step_key(fp, "cc", params_cc, 2))
     for k in range(8, 2, -1):
         key = step_key(fp, "cc", params_cc, k)
@@ -256,7 +295,7 @@ def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):
     resumed_cc = {
         r["id"]: r["component"]
         for r in connected_components(
-            g, algorithm="minlabel", max_iterations=8,
+            g, max_iterations=8,
             checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
         ).collect()
     }

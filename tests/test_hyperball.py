@@ -67,6 +67,28 @@ def test_hyperball_harmonic_tracks_exact(spark):
     assert close > 0.9 * len(exact)
 
 
+def test_hyperball_restores_codegen_when_wide_loop_raises(spark, monkeypatch):
+    """The wide loop runs with whole-stage codegen off; a round that
+    raises must still hand the session its previous setting back."""
+    from lynxkite_spark.operators import hyperball as hb
+
+    real = hb._estimates_wide
+    seen = []
+
+    def failing(state, log2m):
+        seen.append(spark.conf.get("spark.sql.codegen.wholeStage"))
+        if len(seen) > 1:  # the first call seeds the state before the loop
+            raise RuntimeError("round failed")
+        return real(state, log2m)
+
+    monkeypatch.setattr(hb, "_estimates_wide", failing)
+    before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
+    with pytest.raises(RuntimeError, match="round failed"):
+        hb.hyperball(_er_graph(spark, n=40), 2, log2m=4)
+    assert seen[-1] == "false"  # it did fail inside the codegen-off loop
+    assert spark.conf.get("spark.sql.codegen.wholeStage", "true") == before
+
+
 def test_hyperball_portable_hash_path(spark):
     g = _er_graph(spark, n=80)
     a = {r["id"]: r["size"] for r in hyperball(g, 2, log2m=8).collect()}

@@ -64,6 +64,14 @@ def test_edges_for_vertices_incident_set(g):
         edges_for_vertices(g, [0, 1, 2, 3], max_edges=2)
 
 
+def test_edges_for_vertices_over_budget_releases_cache(g, spark):
+    """The over-budget abort leaves no persisted incident table behind."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="max_edges"):
+        edges_for_vertices(g, [0, 1, 2, 3], max_edges=2)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_sampled_view_filter_and_indices(g):
     sv, idx = sampled_view(g.vertices, [4, 2, 0, 99], filter_expr="x <= 2.0")
     # 99 absent, 4 filtered out (x=4.0), survivors sorted
