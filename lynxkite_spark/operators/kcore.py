@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.storagelevel import StorageLevel
 
+from lynxkite_spark import session
 from lynxkite_spark.graph import Graph
 
 
@@ -87,7 +88,7 @@ def core_decomposition(graph: Graph, max_iterations: int = 100) -> DataFrame:
     # the edge stream per round; past the threshold the shuffle-hash path
     # takes over (a multi-million-row broadcast build is serial driver
     # work that caps scaling)
-    broadcast_est = n_vertices <= 200_000
+    broadcast_est = n_vertices <= session.BROADCAST_ROWS
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("est"))
     est = (
         vertices.join(deg, "id", "left")

@@ -13,6 +13,11 @@ variant with deterministic tie-breaking (SURVEY.md §2.1):
 iterated until no label changes or ``max_iterations`` (sync LPA can
 2-cycle on bipartite structures; the cap guarantees termination).
 Edges are treated as undirected (reference passes directed=false).
+
+Each round is one driver action: an eager localCheckpoint of the new
+label table that observes how many labels changed on the way. The
+vertex count comes from the same kind of observation on the initial
+label table, and the symmetric edge cache fills during the first round.
 """
 
 from __future__ import annotations
@@ -22,7 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
-from lynxkite_spark.plans.checkpoint import IterationCheckpoints, materialize
+from lynxkite_spark.plans.checkpoint import (
+    IterationCheckpoints,
+    materialize_observed,
+    release,
+)
 from lynxkite_spark.session import BROADCAST_ROWS
 
 
@@ -50,8 +59,8 @@ def label_propagation(
     )
     if not weighted:
         sym = sym.withColumn("weight", F.lit(1.0))
+    # filled by the first round's gather join
     sym = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
 
     params = {"max_iterations": max_iterations, "weighted": weighted}
     store = IterationCheckpoints(
@@ -60,7 +69,7 @@ def label_propagation(
     start_iter, labels = store.resume()
     if labels is None:
         labels = graph.vertices.select("id", F.col("id").alias("label"))
-    labels = materialize(labels.repartition(n_part, "id"))
+    labels, setup = materialize_observed(labels.repartition(n_part, "id"), n=F.count(F.lit(1)))
     # Broadcast the vertex-sized label table into the gather join while
     # it is small (same trade as pagerank's broadcast_ranks): the big
     # edge stream is then never exchanged OR sorted per round — the only
@@ -68,7 +77,11 @@ def label_propagation(
     # Above the threshold the shuffle-hash gather takes over (building a
     # multi-million-row broadcast is serial driver work that caps
     # scaling).
-    broadcast_labels = graph.vertices.count() <= broadcast_threshold
+    broadcast_labels = setup["n"] <= broadcast_threshold
+    # the local checkpoint behind `labels` (None once they are parquet):
+    # dead once the next round is materialized, so it is released then
+    # rather than whenever the JVM collects it
+    held = labels
 
     for k in range(start_iter + 1, max_iterations + 1):
         # gather neighbor labels onto dst; per-(dst,label) weight sums are
@@ -87,22 +100,26 @@ def label_propagation(
             F.max_by("label", F.struct(F.col("w"), -F.col("label"))).alias("new_label")
         )
         best = F.broadcast(best) if broadcast_labels else best
-        # carry the previous label through the checkpoint so the change
-        # check is a scan of the new table, not a second join (the join
-        # shape cost one more exchange + action per round)
-        new_labels = (
-            labels.join(best, labels.id == best.dst, "left")
-            .select(
+        # carry the previous label into the checkpoint so the change
+        # count is observed by the round's one action, not a second
+        # join or scan
+        new_labels, m = materialize_observed(
+            labels.join(best, labels.id == best.dst, "left").select(
                 "id",
                 F.coalesce("new_label", "label").alias("label"),
                 F.col("label").alias("_old"),
-            )
-            .localCheckpoint(eager=False)  # materialized by the change check
+            ),
+            changed=F.count_if(F.col("label") != F.col("_old")),
         )
-        changed = (
-            new_labels.where(F.col("label") != F.col("_old")).limit(1).count()
-        )
-        labels = store.save(new_labels.drop("_old"), k, changed=changed)
+        changed = m["changed"]
+        if held is not None:
+            release(held)
+        current = new_labels.drop("_old")
+        labels = store.save(current, k, changed=changed)
+        held = new_labels
+        if labels is not current:  # re-read from parquet
+            release(held)
+            held = None
         if changed == 0:
             break
     sym.unpersist()

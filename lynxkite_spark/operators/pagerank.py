@@ -26,8 +26,18 @@ Direction handling follows the frontend's Direction wrapper
 Scale notes (SURVEY.md §4):
   * edges are normalized once, repartitioned by ``src`` and cached — every
     iteration reuses that single shuffle for the gather join;
+  * setup is one driver action: an eager localCheckpoint of the vertex
+    table (id, has_out, out_deg), partitioned by id, fills the edge cache
+    and observes |V|, the non-dangling count and the hot-source count on
+    the way. A fresh start's ranks are that table with rank 1.0 and its
+    dangling-mass total is the exact count damping·|{has_out}|; a resume
+    sums the stored ranks with a plain aggregate (never an observed
+    metric — those merge in task-completion order);
+  * on small graphs a job, not data volume, is the unit of cost, so each
+    setup pass saved is a job saved on every call;
   * the gather join is skew-split HybridRDD-style (plans/skew.py): hub
-    sources join against a broadcast of just the hot rank rows;
+    sources (out_deg above the threshold, a filter over the vertex
+    table) join against a broadcast of just the hot rank rows;
   * groupBy(dst) skew needs no salting — sum() partial-aggregates
     map-side before the shuffle;
   * each round is one driver action: lineage is cut with a lazy
@@ -49,8 +59,10 @@ from lynxkite_spark.plans.checkpoint import (
     CheckpointManager,
     IterationCheckpoints,
     materialize,
+    materialize_observed,
+    release,
 )
-from lynxkite_spark.plans.skew import hot_keys, hybrid_join
+from lynxkite_spark.plans.skew import hybrid_join
 from lynxkite_spark.plans.spread import plan_is_expensive as _plan_is_expensive
 from lynxkite_spark.session import BROADCAST_ROWS, HOT_KEY_THRESHOLD
 
@@ -117,23 +129,36 @@ def pagerank(
     # exact algebraic identity that turns the global total into a scan of
     # the (small, cached) rank table instead of a second consumption of
     # the expensive gather join.
-    en.count()  # materialize the normalized edges once
-    srcs = (
-        en.select(F.col("src").alias("id"))  # from the cache, not the input
-        .distinct()
-        .withColumn("has_out", F.lit(True))
-    )
-    vertices = (
+    #
+    # Setup is ONE action: the vertex table (id, has_out, out_deg) is
+    # checkpointed, partitioned by id, and the same action fills the
+    # normalized-edge cache and observes |V|, the non-dangling count and
+    # the hot-source count (order-insensitive counts only). The vertices
+    # are partitioned BEFORE the join: whichever join AQE settles on then
+    # keeps that layout and row order (repartitioning the join's output
+    # is dropped as redundant after a sort-merge join, and a runtime
+    # switch to a broadcast join then reads that shuffle per mapper).
+    if skew_threshold is None:
+        skew_threshold = HOT_KEY_THRESHOLD
+    out_deg = en.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("out_deg"))
+    vertices, setup = materialize_observed(
         g.vertices.select("id")
-        .join(srcs, "id", "left")
-        .select("id", F.coalesce("has_out", F.lit(False)).alias("has_out"))
         .repartition(n_part, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .join(out_deg, "id", "left")
+        .select(
+            "id",
+            F.col("out_deg").isNotNull().alias("has_out"),
+            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+        ),
+        n=F.count(F.lit(1)),
+        n_out=F.count_if("has_out"),
+        n_hot=F.count_if(F.col("out_deg") > skew_threshold),
     )
-    n_vertices = vertices.count()
+    n_vertices = setup["n"]
     if edges_pinned is not None:
         edges_pinned.unpersist()
     if n_vertices == 0:
+        en.unpersist()
         return vertices.select("id").withColumn("pagerank", F.lit(0.0))
 
     # localCheckpoint output (LogicalRDD) carries no size stats, so
@@ -146,18 +171,13 @@ def pagerank(
     # shuffle join (or the hybrid hot-key split) takes over.
     broadcast_ranks = n_vertices <= broadcast_threshold
 
-    # hot-key set for the gather join, computed once (HybridRDD semantics);
-    # when no key crosses the threshold the plain shuffle join is used —
-    # the hybrid split costs two extra joins per iteration for nothing.
-    # Skipped entirely in broadcast mode (a broadcast join has no skew to
-    # split — the aggregate pass would be paid for nothing).
-    use_hybrid = False
-    hot = None
-    if not broadcast_ranks:
-        if skew_threshold is None:
-            skew_threshold = HOT_KEY_THRESHOLD
-        hot = hot_keys(en, "src", skew_threshold).persist(StorageLevel.MEMORY_AND_DISK)
-        use_hybrid = hot.count() > 0
+    # hot-key set for the gather join (HybridRDD semantics): the sources
+    # with more than skew_threshold edges. When no key crosses the
+    # threshold the plain shuffle join is used — the hybrid split costs
+    # two extra joins per iteration for nothing — and a broadcast join
+    # has no skew to split at all.
+    use_hybrid = not broadcast_ranks and setup["n_hot"] > 0
+    hot = vertices.where(F.col("out_deg") > skew_threshold).select(F.col("id").alias("src"))
 
     params = {"damping": damping, "iterations": iterations, "tol": tol, "direction": direction}
     limit = iterations if iterations is not None else max_iterations
@@ -165,21 +185,29 @@ def pagerank(
         checkpoint, input_fingerprint, "pagerank", params, limit, checkpoint_every
     )
     start_iter, ranks = store.resume()
+    # The dangling-mass total enters each round's plan as a literal: each
+    # round's single driver action returns (max |Δ|, Σ rank over has_out)
+    # together, so the loop body carries no 1-row aggregate subtree or
+    # broadcast build.
     if ranks is None:
-        ranks = vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
-    ranks = materialize(ranks.repartition(n_part, "id"))
+        # every rank starts at 1.0, so the total is an exact count
+        ranks = fresh = vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
+        tot_lit = damping * float(setup["n_out"])
+    else:
+        fresh = None
+        ranks = materialize(ranks.repartition(n_part, "id"))
+        tot_lit = damping * float(
+            ranks.where(F.col("has_out")).agg(F.sum("pagerank").alias("s")).first()["s"]
+            or 0.0
+        )
 
     # A fixed iteration count (the reference's mode) never stops early.
     stop_tol = tol if iterations is None else None
     history: list[dict] = []
-    # The dangling-mass total enters each round's plan as a literal: the
-    # previous round's single driver action returns (max |Δ|, Σ rank over
-    # has_out) together, so the loop body carries no 1-row aggregate
-    # subtree or broadcast build.
-    tot_lit = damping * float(
-        ranks.where(F.col("has_out")).agg(F.sum("pagerank").alias("s")).first()["s"]
-        or 0.0
-    )
+    # the local checkpoint behind `ranks` (None while ranks are the vertex
+    # table or parquet): dead once the next round is materialized, so it
+    # is released then rather than whenever the JVM collects it
+    held = None if fresh is not None else ranks
 
     for k in range(start_iter + 1, limit + 1):
         rank_lookup = ranks.select(F.col("id").alias("src"), "pagerank")
@@ -222,14 +250,21 @@ def pagerank(
         delta = row["d"]
         tot_lit = damping * float(row["s"] or 0.0)
         history.append({"iteration": k, "max_delta": delta})
+        if held is not None:
+            release(held)
         # a due checkpoint is written from the materialized local one
-        ranks = store.save(new_ranks.drop("_prev"), k, history=history)
+        current = new_ranks.drop("_prev")
+        ranks = store.save(current, k, history=history)
+        held = new_ranks
+        if ranks is not current:  # re-read from parquet
+            release(held)
+            held = None
         if stop_tol is not None and delta < stop_tol:
             break
 
-    # every round has run by now; the caches are pure cleanup
+    # every round has run by now; the caches are pure cleanup (the vertex
+    # table stays only if no round ran and the result still reads it)
     en.unpersist()
-    if hot is not None:
-        hot.unpersist()
-    vertices.unpersist()
+    if ranks is not fresh:
+        release(vertices)
     return ranks.select("id", "pagerank")

@@ -10,7 +10,9 @@ Reference: /root/reference/app/.../graph_operations/EnumerateTriangles.scala
     found exactly once (:66-92, 104-109).
 
 Spark expression: canonicalize + ``bit_or`` aggregate, then the classic
-two-join enumeration  (a,b)⋈(b,c)⋈(a,c). Counts are exact integers.
+two-join enumeration  (a,b)⋈(b,c)⋈(a,c). Per-vertex counts explode each
+triangle into its three corners, so the enumeration is planned once.
+Counts are exact integers.
 
 Scale: the joins shuffle on single vertex keys; very-high-degree vertices
 make the (b,c) join skew — AQE skew-join splits those (session.py), and
@@ -59,11 +61,9 @@ def triangle_count(graph: Graph, needs_both_directions: bool = False) -> DataFra
     BuildSegmentationOperations.scala:283-300). Vertices in no triangle
     get 0. Returns DataFrame[id, triangles: long]."""
     tri = enumerate_triangles(graph, needs_both_directions)
-    corners = (
-        tri.select(F.col("a").alias("id"))
-        .unionAll(tri.select("b"))
-        .unionAll(tri.select("c"))
-    )
+    # one enumeration, three corners per row (a union of three selects
+    # would plan the whole enumeration three times)
+    corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
     counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
     return (
         graph.vertices.select("id")

@@ -11,7 +11,9 @@ resumable mid-algorithm.
 
 Each checkpoint carries a sidecar ``_lineage.json`` with per-partition
 row counts + checksums and the convergence metric series — the
-"per-partition lineage + metrics" required by the north rule.
+"per-partition lineage + metrics" required by the north rule — and the
+table's schema, so reading a checkpoint back runs no schema-inference
+job (sidecars written without one still load, by inference).
 """
 
 from __future__ import annotations
@@ -21,9 +23,12 @@ import json
 import os
 import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def step_key(input_fingerprint: str, op: str, params: dict, iteration: int | None = None) -> str:
@@ -71,7 +76,7 @@ class CheckpointManager:
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp)
-        out = self.spark.read.parquet(tmp)
+        out = self.spark.read.schema(df.schema).parquet(tmp)
         # per-partition lineage: row count + order-insensitive checksum per file
         lineage_rows = (
             out.select(
@@ -91,17 +96,24 @@ class CheckpointManager:
             ],
             "total_rows": int(sum(r["rows"] for r in lineage_rows)),
             "metrics": metrics or {},
+            # the schema as read back (file sources make every column
+            # nullable), i.e. what inference would give
+            "schema": out.schema.json(),
         }
         shutil.rmtree(path, ignore_errors=True)
         os.replace(tmp, path)
         with open(os.path.join(path, "_lineage.json"), "w") as f:
             json.dump(sidecar, f, indent=1)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(out.schema).parquet(path)
 
     def load(self, key: str) -> DataFrame | None:
-        if not self.exists(key):
+        sidecar = self.metrics(key)
+        if sidecar is None:
             return None
-        return self.spark.read.parquet(self._dir(key))
+        reader = self.spark.read
+        if "schema" in sidecar:
+            reader = reader.schema(StructType.fromJson(json.loads(sidecar["schema"])))
+        return reader.parquet(self._dir(key))
 
     def metrics(self, key: str) -> dict | None:
         p = os.path.join(self._dir(key), "_lineage.json")
@@ -166,3 +178,32 @@ def materialize(df: DataFrame) -> DataFrame:
     durable CheckpointManager.save at a cadence on top of this (local
     checkpoints don't survive executor loss)."""
     return df.localCheckpoint(eager=True)
+
+
+def materialize_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``materialize`` plus whole-table metrics computed by the same
+    action (``DataFrame.observe``), instead of a second pass over the
+    table. Order-insensitive metrics only (counts, ``count_if``, max):
+    observed values merge in task-completion order, so a float sum's
+    low bits would change from run to run."""
+    name = f"observed_{uuid.uuid4().hex}"
+    observed = df.observe(name, *(c.alias(k) for k, c in metrics.items()))
+    out = materialize(observed)
+    # read from the action's own query execution: an ``Observation``
+    # object would start the session's observation manager, which is not
+    # serializable and then fails every MLlib job that captures the session
+    jrow = observed._jdf.queryExecution().observedMetrics().get(name).get()
+    utils = df.sparkSession.sparkContext._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return out, CPickleSerializer().loads(utils.toPyRow(jrow)).asDict()
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks of a local checkpoint (``materialize`` or a lazy
+    ``localCheckpoint`` that an action has run) now, instead of whenever
+    the JVM garbage-collects it. Its lineage is cut, so only call this
+    once nothing still reads it: a later read fails rather than
+    recomputing. This is the call Spark's context cleaner makes for a
+    collected RDD (``RDD.unpersist`` would log a truncated-lineage
+    warning on every call)."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)

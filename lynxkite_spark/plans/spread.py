@@ -55,12 +55,20 @@ def plan_is_expensive(df: DataFrame) -> bool:
     Iterative operators use this to decide whether to pin their input
     once up front: a bare (possibly cached/checkpointed) scan is cheaper
     to re-read than to copy, while a derived edge table re-runs its
-    whole derivation on every reference."""
+    whole derivation on every reference. Only the analyzed plan's node
+    names are matched, so a column named e.g. ``Joined`` is not a join."""
     try:
-        s = df._jdf.queryExecution().analyzed().toString()
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if any(k in name for k in _EXPENSIVE_NODES):
+                return True
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
     except Exception:  # pragma: no cover - defensive
         return False
-    return any(k in s for k in _EXPENSIVE_NODES)
+    return False
 
 
 def spread_small(df: DataFrame, factor: int = 1) -> DataFrame:

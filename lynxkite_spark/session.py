@@ -20,10 +20,10 @@ from pyspark.sql import SparkSession
 ROWS_PER_PARTITION = 200_000
 HOT_KEY_THRESHOLD = 40_000
 # Largest vertex-sized table the iterative operators (PageRank, LPA,
-# star CC) broadcast into their per-round gather joins. Building a
-# broadcast relation is serial driver work repeated every round; past a
-# few hundred thousand rows it caps scaling and the shuffle-hash join
-# takes over.
+# star CC, k-core, eigenvector and Katz centrality) broadcast into their
+# per-round gather joins. Building a broadcast relation is serial driver
+# work repeated every round; past a few hundred thousand rows it caps
+# scaling and the shuffle-hash join takes over.
 BROADCAST_ROWS = 200_000
 
 

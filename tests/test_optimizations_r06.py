@@ -46,6 +46,11 @@ def test_plan_is_expensive_heuristic(spark, tmp_path):
     assert not plan_is_expensive(scan.where("id > 3").select("id"))
     assert plan_is_expensive(scan.join(scan.selectExpr("id as id2"), scan.id == F.col("id2")))
     assert plan_is_expensive(scan.groupBy("id").count())
+    # node names only: expensive-sounding column names are plain scans
+    assert not plan_is_expensive(scan.select(F.col("id").alias("Joined")))
+    assert not plan_is_expensive(scan.withColumnRenamed("id", "Aggregate_Window"))
+    # a join below a projection is still found
+    assert plan_is_expensive(scan.crossJoin(scan.selectExpr("id as id2")).select("id"))
 
 
 def test_exact_dedup_single_hash_pass_and_values(spark, docs):
